@@ -69,9 +69,13 @@ import time
 
 # Bump when what a timed sample MEASURES changes (not when queries are
 # added): v2 = clearCache between timed runs (r10 honesty fix — every
-# sample is a full recompute from parquet). Records without the field
-# predate v2; ratios against them get cross_methodology: true.
-METHODOLOGY = "noop-median-clearcache-v2"
+# sample is a full recompute from parquet); v3 = the session comes from
+# session.get_spark, so samples include the engine's own defaults
+# (dynamic partition overwrite, Python filter pushdown, snappy parquet,
+# caseSensitive=false) that the bench's hand-built session lacked.
+# Ratios against records of another methodology (or none) get
+# cross_methodology: true.
+METHODOLOGY = "noop-median-clearcache-v3"
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -91,6 +95,53 @@ def _geomean(values: list[float]) -> float | None:
     return round(math.exp(sum(math.log(v) for v in vals) / len(vals)), 3)
 
 
+# Payload keys of the three comparison blocks (compare_to_record).
+VS_PREV_FIELDS = ("file", "geomean", "ratios", "cross_methodology")
+VS_R1_FIELDS = ("n_shared", "geomean", "ratios")
+VS_IDLE_FIELDS = ("file", "n_shared", "geomean", "cross_methodology")
+
+
+def _same_sf(rec: dict | None, sf: float) -> bool:
+    return bool(rec) and abs(sf - rec.get("sf", -1)) < 1e-9
+
+
+def compare_to_record(
+    timings: dict[str, float],
+    sf: float,
+    methodology: str,
+    file: str | None,
+    rec: dict | None,
+    fields: tuple[str, ...],
+) -> dict | None:
+    """Compare per-query ``timings`` against one committed bench record.
+
+    Computes the ratio ``timings[q] / rec[q]`` (3 dp) for every query
+    both sides time (record time > 0), their geomean, and whether the
+    record was timed under another ``methodology``. Returns the
+    ``fields`` subset of {file, n_shared, geomean, ratios,
+    cross_methodology} (cross_methodology only when true), or None when
+    the record is missing, at another scale, or shares no query.
+    """
+    if not _same_sf(rec, sf):
+        return None
+    ratios = {
+        n: round(t / p, 3)
+        for n, t in timings.items()
+        if (p := rec["queries"].get(n)) and p > 0
+    }
+    if not ratios:
+        return None
+    block = {
+        "file": file,
+        "n_shared": len(ratios),
+        "geomean": _geomean(list(ratios.values())),
+        "ratios": ratios,
+    }
+    if rec.get("methodology") != methodology:
+        block["cross_methodology"] = True
+    return {k: block[k] for k in fields if k in block}
+
+
 def main() -> None:
     # Reserve the real stdout for the single result line; everything
     # else (including JVM output inherited through fd 1) goes to stderr.
@@ -99,23 +150,14 @@ def main() -> None:
     sys.stdout = sys.stderr
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
-    from pyspark.sql import SparkSession
+    from covid_data_pipeline_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.appName("bench")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    # get_spark defaults to local[$SPARK_GRAFT_CPUS] and as many shuffle partitions
+    spark = get_spark(
+        app_name="bench",
+        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     )
     spark.sparkContext.setLogLevel("ERROR")
     # VERDICT r7 #2: localCheckpoint(eager=False) lineage cuts whose
@@ -182,16 +224,12 @@ def main() -> None:
     # Any tripped query gets ONE full retry (fresh median) before being
     # declared — defends against a machine-wide contention window that
     # swallows all first-pass samples (the BENCH_r04 4.6x phantom).
-    prev_file, prev = _latest_prev_bench()
+    sf = _sf_from_dir(sf_dir)
+    prev_file, prev = _latest_bench("BENCH_r*.json", "BENCH_full_r*.json")
     regressions: list[str] = []
     drift_advisory: list[str] = []
-    vs_prev: dict | None = None
-    if prev and abs(_sf_from_dir(sf_dir) - prev.get("sf", -1)) < 1e-9:
+    if _same_sf(prev, sf):
         prev_q = prev.get("queries", {})
-
-        def ratio(name: str) -> float | None:
-            p = prev_q.get(name)
-            return round(timings[name] / p, 3) if p and p > 0 else None
 
         # Sub-second queries vary ±40% run-to-run on this box (measured):
         # trip on ratio AND absolute delta so only regressions that move
@@ -214,43 +252,30 @@ def main() -> None:
             if tripped(name):
                 p = prev_q[name]
                 regressions.append(
-                    f"{name}: {p}s -> {timings[name]}s ({ratio(name)}x)"
+                    f"{name}: {p}s -> {timings[name]}s "
+                    f"({round(timings[name] / p, 3)}x)"
                 )
-
-        ratios = {n: r for n in timings if (r := ratio(n)) is not None}
-        if ratios:
-            geomean = _geomean(list(ratios.values()))
-            vs_prev = {"file": prev_file, "geomean": geomean, "ratios": ratios}
-            if prev.get("methodology") != METHODOLOGY:
-                vs_prev["cross_methodology"] = True
-            # systemic slowdown across the whole set: DRIFT advisory,
-            # not a per-query regression (see module docstring)
-            if geomean is not None and geomean > 1.25:
-                drift_advisory.append(f"geomean vs {prev_file}: {geomean}x")
         for line in regressions:
             print(f"# REGRESSION {line}", file=sys.stderr)
 
     spark.stop()
+
+    vs_prev = compare_to_record(
+        timings, sf, METHODOLOGY, prev_file, prev, VS_PREV_FIELDS
+    )
+    # systemic slowdown across the whole set: DRIFT advisory, not a
+    # per-query regression (see module docstring)
+    if vs_prev and vs_prev["geomean"] is not None and vs_prev["geomean"] > 1.25:
+        drift_advisory.append(f"geomean vs {prev_file}: {vs_prev['geomean']}x")
 
     # Fixed r1 anchor (VERDICT r5 structural caution): vs_prev re-baselines
     # against the newest committed record every round, which can hide slow
     # cumulative drift. The driver's 2x contract is against the ROUND-1
     # record, so the ratio vs r1's 19 original headline queries stays
     # visible in every payload alongside vs_prev.
-    vs_r1: dict | None = None
-    r1 = _load_bench_record("BENCH_r01.json")
-    if r1 and abs(_sf_from_dir(sf_dir) - r1.get("sf", -1)) < 1e-9:
-        r1_ratios = {
-            n: round(timings[n] / p, 3)
-            for n, p in r1.get("queries", {}).items()
-            if n in timings and p > 0
-        }
-        if r1_ratios:
-            vs_r1 = {
-                "n_shared": len(r1_ratios),
-                "geomean": _geomean(list(r1_ratios.values())),
-                "ratios": r1_ratios,
-            }
+    vs_r1 = compare_to_record(
+        timings, sf, METHODOLOGY, *_latest_bench("BENCH_r01.json"), VS_R1_FIELDS
+    )
 
     # Suite-level drift tripwire (VERDICT r8 ask #3 / What's wrong #2):
     # the per-query min-of-runs rule judges queries one at a time, so a
@@ -259,33 +284,20 @@ def main() -> None:
     # 1.11x idle-vs-idle with regressions: []). Compare against the
     # newest committed IDLE record (BENCH_full_r{N}.json, written by
     # the end-of-round idle run, never by the contended driver run) and
-    # NAME a >1.05 geomean in the regressions list so it gets
+    # NAME a >1.05 geomean in the drift advisory so it gets
     # investigated, not averaged away.
-    vs_idle: dict | None = None
-    idle_file, idle = _latest_idle_bench()
-    if idle and abs(_sf_from_dir(sf_dir) - idle.get("sf", -1)) < 1e-9:
-        idle_ratios = {
-            n: round(timings[n] / p, 3)
-            for n, p in idle.get("queries", {}).items()
-            if n in timings and p > 0
-        }
-        if idle_ratios:
-            g = _geomean(list(idle_ratios.values()))
-            vs_idle = {
-                "file": idle_file,
-                "n_shared": len(idle_ratios),
-                "geomean": g,
-            }
-            if idle.get("methodology") != METHODOLOGY:
-                vs_idle["cross_methodology"] = True
-            if g is not None and g > 1.05:
-                drift_advisory.append(
-                    f"suite geomean vs idle record {idle_file}: {g}x over "
-                    f"{len(idle_ratios)} shared queries — uniform drift "
-                    "the per-query gate cannot see; A/B a pinned commit "
-                    "idle before attributing to code"
-                )
-                print(f"# DRIFT {drift_advisory[-1]}", file=sys.stderr)
+    idle_file, idle = _latest_bench("BENCH_full_r*.json")
+    vs_idle = compare_to_record(
+        timings, sf, METHODOLOGY, idle_file, idle, VS_IDLE_FIELDS
+    )
+    if vs_idle and vs_idle["geomean"] is not None and vs_idle["geomean"] > 1.05:
+        drift_advisory.append(
+            f"suite geomean vs idle record {idle_file}: {vs_idle['geomean']}x "
+            f"over {vs_idle['n_shared']} shared queries — uniform drift "
+            "the per-query gate cannot see; A/B a pinned commit "
+            "idle before attributing to code"
+        )
+        print(f"# DRIFT {drift_advisory[-1]}", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
     payload = {
@@ -358,41 +370,25 @@ def main() -> None:
         sys.exit(1)
 
 
-def _latest_idle_bench() -> tuple[str | None, dict | None]:
-    """Newest committed IDLE bench record (BENCH_full_r{N}.json only —
-    the builder's end-of-round idle run; BENCH_r{N}.json is the
-    driver's and can be machine-contended)."""
+def _latest_bench(*patterns: str) -> tuple[str | None, dict | None]:
+    """Newest committed bench record matching any glob ``pattern`` that
+    carries per-query timings, as (basename, record).
+
+    Rounds sort by their ``_r{N}`` number; within a round the
+    ``BENCH_full_r{N}.json`` payload wins over the driver's
+    ``BENCH_r{N}.json``, which from round 5 on holds only the compact
+    summary line (VERDICT r4 ask #3). ``BENCH_full_r*.json`` alone
+    selects the builder's end-of-round IDLE records (the driver's can
+    be machine-contended)."""
     import glob
 
     here = os.path.dirname(os.path.abspath(__file__))
     cands = sorted(
-        glob.glob(os.path.join(here, "BENCH_full_r*.json")),
-        key=lambda p: int(re.search(r"_r(\d+)", os.path.basename(p)).group(1)),
-    )
-    for path in reversed(cands):
-        rec = _parse_bench_record(path)
-        if rec is not None:
-            return os.path.basename(path), rec
-    return None, None
-
-
-def _latest_prev_bench() -> tuple[str | None, dict | None]:
-    """Newest committed bench record that carries per-query timings.
-
-    From round 5 on, the driver-recorded BENCH_r{N}.json holds only the
-    compact summary line (per VERDICT r4 ask #3 — the full 56-query line
-    outgrew the driver's tail capture), so the end-of-round workflow
-    commits the full payload as BENCH_full_r{N}.json alongside it; both
-    patterns are candidates here, newest round first."""
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    cands = sorted(
-        glob.glob(os.path.join(here, "BENCH_r*.json"))
-        + glob.glob(os.path.join(here, "BENCH_full_r*.json")),
+        {p for pat in patterns for p in glob.glob(os.path.join(here, pat))},
         key=lambda p: (
             int(re.search(r"_r(\d+)", os.path.basename(p)).group(1)),
             "full" in os.path.basename(p),
+            os.path.basename(p),
         ),
     )
     for path in reversed(cands):
@@ -400,13 +396,6 @@ def _latest_prev_bench() -> tuple[str | None, dict | None]:
         if rec is not None:
             return os.path.basename(path), rec
     return None, None
-
-
-def _load_bench_record(basename: str) -> dict | None:
-    """A specific committed bench record's per-query timings (or None)."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    path = os.path.join(here, basename)
-    return _parse_bench_record(path) if os.path.exists(path) else None
 
 
 def _parse_bench_record(path: str) -> dict | None:

@@ -421,7 +421,7 @@ def radius_pairs(
     ``salt`` bounds — per-key candidate mass drops by ``salt``× with
     bit-identical output (see :func:`_cross_candidates`). Size it as
     salt ≈ ⌈|hot cell|² / target_rows_per_task⌉; the one-hot-cell
-    stress case (tests/test_stress.py::test_radius_pairs_hot_cell_*)
+    stress case (tools/stress_report.py::case_radius_pairs_hot_cell_2k)
     pins exactness, salt invariance, and the closed-form output count
     on a planted 2k-point hot cell."""
     if radius_m is not None and radius * 0.11132 < float(radius_m):

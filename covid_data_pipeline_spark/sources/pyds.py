@@ -129,10 +129,25 @@ class _Range(InputPartition):
         self.start, self.end = start, end
 
 
+_OPTION_KEYS = (
+    "numpartitions", "rowsperpartition", "nusers", "stepseconds", "seed",
+    "rowsperbatch", "absorbfilters", "maxrows",
+)
+
+
 class _Opts:
-    """Parsed, validated source options (shared batch/stream)."""
+    """Parsed, validated source options (shared batch/stream). Spark
+    lower-cases option keys; an unknown key raises instead of silently
+    falling back to the defaults (a misspelled ``n_rows`` once read
+    8x1000 rows where 16M were meant)."""
 
     def __init__(self, options: dict):
+        unknown = sorted(set(options) - set(_OPTION_KEYS))
+        if unknown:
+            raise ValueError(
+                f"synthetic_events: unknown option(s) {unknown}; "
+                f"accepted (case-insensitive): {list(_OPTION_KEYS)}"
+            )
         self.num_partitions = int(options.get("numpartitions", 8))
         self.rows_per_partition = int(options.get("rowsperpartition", 1000))
         self.n_users = int(options.get("nusers", 1000))
@@ -260,9 +275,3 @@ class SyntheticEventsDataSource(DataSource):
 def register_synthetic_source(spark) -> None:
     """Idempotent registration of the synthetic events source."""
     spark.dataSource.register(SyntheticEventsDataSource)
-
-
-def expected_event_count(
-    num_partitions: int, rows_per_partition: int
-) -> int:
-    return num_partitions * rows_per_partition

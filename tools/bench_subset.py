@@ -18,22 +18,12 @@ def main() -> None:
     names = sys.argv[1].split(",")
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
+    from covid_data_pipeline_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.appName("bench_subset")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="bench_subset",
+        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     )
     spark.sparkContext.setLogLevel("ERROR")
     try:

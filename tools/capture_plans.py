@@ -14,22 +14,10 @@ def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
     only = set(sys.argv[2:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
+    from covid_data_pipeline_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.appName("capture_plans")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="capture_plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     from covid_data_pipeline_spark.harness.registry import QUERIES

@@ -80,6 +80,7 @@ def main() -> int:
     else:
         names = list(WINDOW_PRIORITY)
 
+    # Own builder on purpose: it copies the external driver's session, not get_spark's.
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("driver-mirror")

@@ -51,22 +51,11 @@ def main() -> int:
               file=sys.stderr)
         return 2
 
-    from pyspark.sql import SparkSession
+    from covid_data_pipeline_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("scaling-bench")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="scaling-bench",
+        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -8,9 +8,13 @@ partitioning invariance (same answer after an adversarial repartition —
 the class of bug sf0.01 cannot surface, cf. the round-2 global-rank
 corruption that only appeared at 16M rows), and reports wall-clock.
 
-Run: ``python tools/stress_report.py [--out STRESS_rN.json]``
+Run: ``python tools/stress_report.py [--only a,b] [--out STRESS_rN.json]``
 (local[$SPARK_GRAFT_CPUS], ~16 GB driver; ~10-20 min). Exit code 0 =
-every case's checks passed. Output: ONE JSON line, plus the file.
+every case's checks passed. Output: ONE JSON line on stdout, also
+written to the ``--out`` file when one is given.
+
+``CASES`` is the only stress case table: ``tests/test_stress.py`` runs
+each case as one test (``SPARK_GRAFT_STRESS=1``).
 """
 
 from __future__ import annotations
@@ -394,7 +398,7 @@ def case_heavy_hitters_16m(spark):
         "scale_vs_sf0.1": "160x events",
         "sec": round(wall, 2),
         "invariant": got2 == got,
-        "ok": got == exact and got2 == got and len(got) == 20,
+        "ok": got == exact and got2 == got and len(got) == 20 and wall < 300,
     }
 
 
@@ -3258,6 +3262,264 @@ def case_jonckheere_16m(spark):
     }
 
 
+def case_dwell_percentiles_16m(spark):
+    """Per-user inter-event gaps over 16M events (the dwell-percentile
+    input): the distinct gap domain must stay far below the row count —
+    the domain compression the exact percentile path relies on."""
+    from pyspark.sql.window import Window
+
+    from covid_data_pipeline_spark.functions.scalar import epoch_seconds
+
+    ev = _events_16m(spark)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ts_s = epoch_seconds("ts")
+    gaps = (
+        ev.filter(F.col("ts").isNotNull())
+        .select(F.floor(ts_s - F.lag(ts_s).over(w)).cast("bigint").alias("g"))
+        .filter(F.col("g").isNotNull())
+    )
+    t0 = time.time()
+    n_distinct = gaps.select("g").distinct().count()
+    wall = time.time() - t0
+    return {
+        "rows": 16_000_000,
+        "scale_vs_sf0.1": "160x events",
+        "sec": round(wall, 2),
+        "distinct_gaps": n_distinct,
+        "ok": n_distinct < 1_000_000,
+    }
+
+
+def _modular_docs(spark, n):
+    # 12 pseudo-words per doc from id * (j + 7) % 9973
+    return spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(
+            " ",
+            *[
+                F.concat(F.lit(f"w{j}x"), ((F.col("id") * (j + 7)) % 9973))
+                for j in range(12)
+            ],
+        ).alias("text"),
+    )
+
+
+def case_prefix_jaccard_200k(spark):
+    """200k synthetic docs with 100k planted append-mutants through the
+    exact prefix-filtered Jaccard join: every planted pair found, the
+    join bounded by posting-prefix mass (not n^2; wall < 600 s), and a
+    deterministic output slice partitioning-invariant."""
+    from covid_data_pipeline_spark.operators.dedup import jaccard_join_prefix
+
+    n = 100_000
+    base = _modular_docs(spark, n)
+    mutants = base.select(
+        (F.col("doc_id") + n).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" zq")).alias("text"),
+    )
+    docs = base.unionByName(mutants)
+    t0 = time.time()
+    pairs = jaccard_join_prefix(docs, shingle_k=3, threshold=0.6)
+    planted = pairs.filter(F.col("id_b") == F.col("id_a") + n).count()
+    wall = time.time() - t0
+    a = sorted(map(tuple, pairs.filter(F.col("id_a") < 500).collect()))
+    b = sorted(
+        map(
+            tuple,
+            jaccard_join_prefix(docs.repartition(157), shingle_k=3, threshold=0.6)
+            .filter(F.col("id_a") < 500)
+            .collect(),
+        )
+    )
+    return {
+        "docs": 2 * n,
+        "sec": round(wall, 2),
+        "planted_found": planted,
+        "invariant": a == b,
+        "ok": planted == n and a == b and len(a) >= 500 and wall < 600,
+    }
+
+
+def case_split_skew_join_16m(spark):
+    """16M-row probe with a planted 70%-hot key through the hot/cold
+    split join: per-group row counts and value sums identical to the
+    vanilla join."""
+    from covid_data_pipeline_spark.operators.scale import split_skew_join
+
+    ev = _events_16m(spark).select(
+        F.when(F.col("user_id") % 10 < 7, F.lit(0))
+        .otherwise(F.col("user_id"))
+        .alias("k"),
+        "value",
+    )
+    dim = ev.select("k").distinct().withColumn("grp", F.col("k") % 13)
+
+    def _agg(j):
+        return {
+            r["grp"]: (r["n"], r["cents"])
+            for r in j.groupBy("grp")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.floor(F.col("value") * 100).cast("bigint")).alias("cents"),
+            )
+            .collect()
+        }
+
+    t0 = time.time()
+    split = _agg(split_skew_join(ev, dim, on=["k"], num_salts=32))
+    wall = time.time() - t0
+    plain = _agg(ev.join(dim, on=["k"]))
+    return {
+        "rows": 16_000_000,
+        "scale_vs_sf0.1": "160x events",
+        "sec": round(wall, 2),
+        "equals_plain": split == plain,
+        "ok": split == plain and len(split) == 13,
+    }
+
+
+def case_containment_200k(spark):
+    """100k synthetic docs + 100k planted quotes (their first 7 of 12
+    tokens) through the inverted-index containment join: every quote
+    found at exactly 10000 bp, bounded by posting mass (wall < 600 s),
+    and a deterministic output slice partitioning-invariant."""
+    from covid_data_pipeline_spark.operators.dedup import containment_pairs
+
+    n = 100_000
+    base = _modular_docs(spark, n)
+    quotes = base.select(
+        (F.col("doc_id") + n).alias("doc_id"),
+        F.regexp_extract(F.col("text"), r"^(\S+(?: \S+){6})", 1).alias("text"),
+    )
+    docs = base.unionByName(quotes)
+    t0 = time.time()
+    pairs = containment_pairs(docs, threshold_bp=9000, max_df=1000)
+    planted = pairs.filter(
+        (F.col("id_a") == F.col("id_b") + n) & (F.col("containment_bp") == 10_000)
+    ).count()
+    wall = time.time() - t0
+
+    def _probe(p):
+        return sorted(
+            map(tuple, p.filter((F.col("id_a") >= n) & (F.col("id_a") < n + 500)).collect())
+        )
+
+    a = _probe(pairs)
+    b = _probe(containment_pairs(docs.repartition(157), threshold_bp=9000, max_df=1000))
+    return {
+        "docs": 2 * n,
+        "sec": round(wall, 2),
+        "planted_found": planted,
+        "invariant": a == b,
+        "ok": planted == n and a == b and len(a) >= 500 and wall < 600,
+    }
+
+
+def case_mad_outliers_16m(spark):
+    """MAD outlier flags over 16M events, per event type: flagged counts
+    and quantized-value sums invariant under a prime repartition."""
+    from covid_data_pipeline_spark.operators.relational import mad_outliers
+
+    ev = _events_16m(spark)
+
+    def _flagged(df):
+        return sorted(
+            map(
+                tuple,
+                mad_outliers(df, ["event_type"], "value", k=1)
+                .filter(F.col("is_outlier"))
+                .groupBy("event_type")
+                .agg(F.count(F.lit(1)).alias("n"), F.sum("__vq").alias("s"))
+                .collect(),
+            )
+        )
+
+    t0 = time.time()
+    a = _flagged(ev)
+    wall = time.time() - t0
+    b = _flagged(ev.repartition(253))
+    return {
+        "rows": 16_000_000,
+        "scale_vs_sf0.1": "160x events",
+        "sec": round(wall, 2),
+        "invariant": a == b,
+        "ok": a == b and len(a) >= 1,
+    }
+
+
+def case_bm25_1m_docs(spark):
+    """BM25 top-k over 1M docs whose shared filler terms exceed the
+    document-frequency cap: the capped query must still return exactly
+    the 10 docs carrying the planted rare term."""
+    from covid_data_pipeline_spark.operators.retrieval import bm25_topk
+
+    n = 1_000_000
+    docs = spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.concat(
+            F.lit("common filler words here "),
+            F.when(F.col("id") % 100_000 == 7, F.lit("xylophone")).otherwise(
+                F.lit("noise")
+            ),
+        ).alias("text"),
+    )
+    q = spark.createDataFrame([(1, "common xylophone")], "query_id long, qtext string")
+    t0 = time.time()
+    got = {r["doc_id"] for r in bm25_topk(docs, q, k=10, max_df_frac=0.5).collect()}
+    wall = time.time() - t0
+    return {
+        "docs": n,
+        "sec": round(wall, 2),
+        "ok": got == set(range(7, n, 100_000)),
+    }
+
+
+def case_radius_pairs_hot_cell_2k(spark):
+    """One pathological hot cell (VERDICT r10 #3): 2,000 points inside
+    ONE grid cell, all pairwise within radius, plus 50k background
+    points >= 10 radii apart. Pins the density contract of radius_pairs:
+    exactly k(k-1)/2 pairs (output IS quadratic in cell density), and
+    ``salt`` spreads the hot cell's candidate mass with a bit-identical
+    pair set, also under repartitioning."""
+    from covid_data_pipeline_spark.operators.geo import radius_pairs
+
+    k = 2_000
+    radius = 1_000
+    hot = spark.range(k).select(
+        F.col("id").alias("pid"),
+        F.pmod(F.xxhash64("id"), F.lit(radius // 2)).alias("x"),
+        F.pmod(F.xxhash64(F.col("id") + 1), F.lit(radius // 2)).alias("y"),
+    )
+    bg = spark.range(50_000).select(
+        (F.col("id") + 1_000_000).alias("pid"),
+        (F.lit(100_000) + F.col("id") * 10 * radius).alias("x"),
+        (F.col("id") % 2 * 10 * radius).alias("y"),
+    )
+    pts = hot.unionByName(bg)
+    t0 = time.time()
+    n_unsalted = radius_pairs(pts, "pid", "x", "y", radius).count()
+    wall = time.time() - t0
+    n_salted = radius_pairs(pts, "pid", "x", "y", radius, salt=16).count()
+    unsalted_set = {
+        (r["id_a"], r["id_b"])
+        for r in radius_pairs(pts, "pid", "x", "y", radius).collect()
+    }
+    salted_set = {
+        (r["id_a"], r["id_b"])
+        for r in radius_pairs(
+            pts.repartition(37), "pid", "x", "y", radius, salt=16
+        ).collect()
+    }
+    return {
+        "pairs": n_unsalted,
+        "sec": round(wall, 2),
+        "salt_identical": salted_set == unsalted_set,
+        "ok": n_unsalted == k * (k - 1) // 2
+        and n_salted == n_unsalted
+        and salted_set == unsalted_set,
+    }
+
+
 CASES = {
     "funnel_16m": case_funnel_16m,
     "token_budget_12m": case_token_budget_12m,
@@ -3316,11 +3578,18 @@ CASES = {
     "log_odds_100k_vocab": case_log_odds_100k_vocab,
     "friedman_1m_blocks": case_friedman_1m_blocks,
     "jonckheere_16m": case_jonckheere_16m,
+    "dwell_percentiles_16m": case_dwell_percentiles_16m,
+    "prefix_jaccard_200k": case_prefix_jaccard_200k,
+    "split_skew_join_16m": case_split_skew_join_16m,
+    "containment_200k": case_containment_200k,
+    "mad_outliers_16m": case_mad_outliers_16m,
+    "bm25_1m_docs": case_bm25_1m_docs,
+    "radius_pairs_hot_cell_2k": case_radius_pairs_hot_cell_2k,
 }
 
 
 def main() -> int:
-    out_path = "STRESS_r04.json"
+    out_path = None
     if "--out" in sys.argv:
         out_path = sys.argv[sys.argv.index("--out") + 1]
     only = None
@@ -3332,8 +3601,7 @@ def main() -> int:
     from covid_data_pipeline_spark.session import get_spark
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app_name="stress-report", driver_memory="16g",
-                      master=f"local[{cpus}]")
+    spark = get_spark(app_name="stress-report", driver_memory="16g")
     spark.sparkContext.setLogLevel("ERROR")
 
     report: dict[str, dict] = {}
@@ -3360,8 +3628,9 @@ def main() -> int:
         "fail": n_fail,
     }
     print(json.dumps(line))
-    with open(out_path, "w") as f:
-        json.dump(line, f, indent=1)
+    if out_path:
+        with open(out_path, "w") as f:
+            json.dump(line, f, indent=1)
     spark.stop()
     return 1 if n_fail else 0
 
