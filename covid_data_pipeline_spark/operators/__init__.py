@@ -37,11 +37,7 @@ from covid_data_pipeline_spark.operators.similarity import (
     cosine_topk_lsh,
     embedding_neardup_pairs,
 )
-from covid_data_pipeline_spark.operators.windows import (
-    incremental_deltas,
-    top_k_per_group,
-    with_deltas,
-)
+from covid_data_pipeline_spark.operators.windows import top_k_per_group, with_deltas
 
 __all__ = [
     "asof_join",
@@ -72,7 +68,6 @@ __all__ = [
     "cosine_topk_ivf",
     "cosine_topk_lsh",
     "embedding_neardup_pairs",
-    "incremental_deltas",
     "top_k_per_group",
     "with_deltas",
 ]

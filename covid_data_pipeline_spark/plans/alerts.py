@@ -1,12 +1,14 @@
 """alerts: threshold alerting over the star schema, idempotent sink.
 
 Reference: the four Trino SQLs (alert_case_spike.sql, alert_death_spike.sql,
-alert_incidence.sql, deaths_incidence.sql) re-expressed as one
-parameterized Spark plan. Shared shape per query:
+alert_incidence.sql, deaths_incidence.sql) re-expressed as one Spark plan
+that evaluates all four:
 
-  fact JOIN dim → LAG(measure) per location_key over report_date →
-  filter to the alert day ABOVE the window → unclamped delta + rate →
-  thresholds → formatted description → NOT EXISTS dedup → append
+  fact JOIN dim → LAG(confirmed), LAG(deaths) per location_key over
+  report_date (one window) → filter to the alert day ABOVE the window →
+  unclamped deltas + rates → each query's threshold, metric and formatted
+  description as one array slot (NULL when it does not fire), inlined →
+  NOT EXISTS dedup → append
 
 Policy notes (SURVEY.md §7.3): alerts do NOT clamp negative deltas —
 they filter ``prev IS NOT NULL`` and ``delta > 0``; this is deliberately
@@ -30,16 +32,6 @@ from covid_data_pipeline_spark.operators.relational import anti_join, dim_join
 from covid_data_pipeline_spark.operators.windows import with_deltas
 from covid_data_pipeline_spark.plans import schemas as S
 from covid_data_pipeline_spark.sources.writers import Warehouse, write_jdbc
-
-ALERT_COLUMNS = (
-    "alert_date",
-    "country",
-    "alert_type",
-    "severity",
-    "metric_value",
-    "description",
-    "created_at",
-)
 
 
 @dataclass(frozen=True)
@@ -119,12 +111,15 @@ ALERT_SPECS: tuple[AlertSpec, ...] = (
 )
 
 
-def build_alerts(
-    fact: DataFrame, dim: DataFrame, report_date: str, spec: AlertSpec
-) -> DataFrame:
-    """One alert query's candidate rows for the day (pre-dedup)."""
+def build_alerts(fact: DataFrame, dim: DataFrame, report_date: str) -> DataFrame:
+    """The four alert queries' candidate rows for the day (pre-dedup).
+
+    One join and one LAG window serve every spec: the specs become
+    columns of a single projection instead of four unioned plans, whose
+    column pruning would split the window back into one per measure."""
+    measures = sorted({spec.measure for spec in ALERT_SPECS})
     joined = dim_join(
-        fact.select("report_date", "location_key", spec.measure),
+        fact.select("report_date", "location_key", *measures),
         dim.select("location_key", "country_name", "population"),
         on=["location_key"],
         how="inner",
@@ -133,26 +128,33 @@ def build_alerts(
         joined,
         partition_by=["location_key"],
         order_by=["report_date"],
-        cols=[spec.measure],
+        cols=measures,
         clamp=False,  # alert policy: raw delta, no clamp
         prev_suffix="_prev",
         delta_prefix="new_",
     )
-    delta = F.col(f"new_{spec.measure}")
-    prev = F.col(f"{spec.measure}_prev")
+    day = hist.filter(F.col("report_date") == F.lit(report_date).cast("date"))
     pop = F.col("population")
-    day = hist.filter(
-        (F.col("report_date") == F.lit(report_date).cast("date"))
-        & prev.isNotNull()  # first-observed-day rows never alert
-        & spec.predicate(delta, prev, pop)
-    )
+    fired = []
+    for spec in ALERT_SPECS:
+        delta = F.col(f"new_{spec.measure}")
+        prev = F.col(f"{spec.measure}_prev")
+        fired.append(
+            F.when(
+                prev.isNotNull()  # first-observed-day rows never alert
+                & spec.predicate(delta, prev, pop),
+                F.struct(
+                    F.lit(spec.alert_type).alias("alert_type"),
+                    F.lit(spec.severity).alias("severity"),
+                    spec.metric(delta, pop).alias("metric_value"),
+                    spec.description(delta, pop).alias("description"),
+                ),
+            )
+        )
     return day.select(
         F.col("report_date").alias("alert_date"),
         F.col("country_name").alias("country"),
-        F.lit(spec.alert_type).alias("alert_type"),
-        F.lit(spec.severity).alias("severity"),
-        spec.metric(delta, pop).alias("metric_value"),
-        spec.description(delta, pop).alias("description"),
+        F.inline(F.array_compact(F.array(*fired))),
         F.current_timestamp().alias("created_at"),
     )
 
@@ -167,13 +169,12 @@ def run_all_alerts(
 ) -> int:
     """Run the four alert queries for the day; dedup against existing
     alerts (idempotent — the reference's NOT EXISTS contract); append.
-    Returns the number of new alert rows."""
-    fact = wh.read(S.FACT_TABLE)
-    dim = wh.read(S.DIM_TABLE)
-    candidates = None
-    for spec in ALERT_SPECS:
-        df = build_alerts(fact, dim, report_date, spec)
-        candidates = df if candidates is None else candidates.unionByName(df)
+    Returns the number of new alert rows. The cached count fills the
+    cache both sinks read, and skips the append on a day without new
+    alerts (an empty append would leave an unreadable alerts/ dir)."""
+    candidates = build_alerts(
+        wh.read(S.FACT_TABLE), wh.read(S.DIM_TABLE), report_date
+    )
 
     if wh.exists(S.ALERTS_TABLE):
         existing = wh.read(S.ALERTS_TABLE).filter(

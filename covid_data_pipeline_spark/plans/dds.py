@@ -10,16 +10,11 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.functions.scalar import surrogate_key
-from covid_data_pipeline_spark.operators.relational import (
-    dim_join,
-    distinct_rows,
-    is_empty,
-    null_key_count,
-)
+from covid_data_pipeline_spark.operators.relational import dim_join, distinct_rows
 from covid_data_pipeline_spark.plans import schemas as S
 from covid_data_pipeline_spark.sources.writers import Warehouse
 
@@ -67,9 +62,12 @@ def build_fact_day(ods_day: DataFrame, dim: DataFrame) -> DataFrame:
     return joined.select(*[F.col(c) for c in FACT_COLUMNS])
 
 
-def process_dds(spark: SparkSession, wh: Warehouse, report_date: str) -> bool:
+def process_dds(spark: SparkSession, wh: Warehouse, report_date: str) -> int:
     """DDS stage: rebuild dim wholesale, build the day's fact slice,
-    overwrite its partition. Returns False if the ODS day is empty."""
+    overwrite its partition. Returns the fact rows written (0 when the
+    ODS day is empty); the written and NULL-key row counts (the
+    reference's DQ warning, process_covid_dds.py:75-77) are observed on
+    the write, not counted by separate jobs."""
     population = wh.read(S.POPULATION_TABLE)
     dim = build_dim_location(population)
     wh.replace(dim, S.DIM_TABLE)
@@ -77,14 +75,17 @@ def process_dds(spark: SparkSession, wh: Warehouse, report_date: str) -> bool:
     ods_day = wh.read(S.ODS_TABLE).filter(
         F.col("report_date") == F.lit(report_date).cast("date")
     )
-    if is_empty(ods_day):
-        return False
-
-    fact = build_fact_day(ods_day, wh.read(S.DIM_TABLE))
-    missing = null_key_count(fact, "location_key")
-    if missing:
-        log.warning(
-            "%d records failed to join (missing population for year)", missing
-        )
+    written = Observation()
+    fact = build_fact_day(ods_day, wh.read(S.DIM_TABLE)).observe(
+        written,
+        F.count(F.lit(1)).alias("rows"),
+        F.count_if(F.col("location_key").isNull()).alias("missing"),
+    )
     wh.overwrite_partitions(fact, S.FACT_TABLE, partition_by=["report_date"])
-    return True
+    metrics = written.get
+    if metrics["missing"]:
+        log.warning(
+            "%d records failed to join (missing population for year)",
+            metrics["missing"],
+        )
+    return metrics["rows"]

@@ -5,41 +5,20 @@ LAG-window deltas (clamped at 0), per-100k + rate metrics, risk CASE,
 filtered to the processing day ABOVE the window (the LAG must see the
 prior day — SURVEY.md §7.3 trap), dynamic partition overwrite.
 
-Two variants, verified equal on contiguous daily series (tests):
-
-* :func:`build_mart_history` — exact reference plan: window over the
-  full fact history. O(history) read per day.
-* :func:`build_mart_incremental` — engine optimization: join today's
-  fact partition against yesterday's. O(2 partitions) per day — the
-  plan that survives 100 TB of fact history.
+The LAG runs over the full fact history, so each country's delta is taken
+against its last report, whatever gap lies between.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.functions.scalar import bucketize, per_100k, rate_percent
 from covid_data_pipeline_spark.operators.relational import dim_join
-from covid_data_pipeline_spark.operators.windows import incremental_deltas, with_deltas
+from covid_data_pipeline_spark.operators.windows import with_deltas
 from covid_data_pipeline_spark.plans import schemas as S
 from covid_data_pipeline_spark.sources.writers import Warehouse
-
-MART_COLUMNS = (
-    "report_date",
-    "country_name",
-    "population",
-    "total_confirmed",
-    "total_deaths",
-    "total_recovered",
-    "current_active_cases",
-    "new_cases_today",
-    "new_deaths_today",
-    "cases_per_100k",
-    "fatality_rate_percent",
-    "recovery_rate_percent",
-    "risk_category",
-)
 
 
 def _joined_base(fact: DataFrame, dim: DataFrame) -> DataFrame:
@@ -107,43 +86,14 @@ def build_mart_history(
     return out.filter(F.col("report_date") == F.lit(report_date).cast("date"))
 
 
-def build_mart_incremental(
-    fact_today: DataFrame, fact_yesterday: DataFrame, dim: DataFrame
-) -> DataFrame:
-    """Scale plan: today's partition joined against yesterday's on
-    country — reads 2 partitions instead of full history. Identical
-    output to :func:`build_mart_history` on contiguous daily data
-    (first-ever day: LAG is NULL ≡ missing yesterday partition)."""
-    today = _joined_base(fact_today, dim)
-    yesterday = _joined_base(fact_yesterday, dim)
-    deltas = incremental_deltas(
-        today,
-        yesterday,
-        keys=["country_name"],
-        cols=["total_confirmed", "total_deaths"],
-        clamp=True,
-        delta_prefix="delta_",
+def process_mart(spark: SparkSession, wh: Warehouse, report_date: str) -> int:
+    """Mart stage: compute the day's analytics and overwrite its
+    partition. Returns the rows written, observed on the write."""
+    mart = build_mart_history(wh.read(S.FACT_TABLE), wh.read(S.DIM_TABLE), report_date)
+    written = Observation()
+    wh.overwrite_partitions(
+        mart.observe(written, F.count(F.lit(1)).alias("rows")),
+        S.MART_TABLE,
+        partition_by=["report_date"],
     )
-    return _finalize(deltas)
-
-
-def process_mart(
-    spark: SparkSession,
-    wh: Warehouse,
-    report_date: str,
-    incremental: bool = False,
-) -> bool:
-    """Mart stage: compute the day's analytics and overwrite its partition."""
-    dim = wh.read(S.DIM_TABLE)
-    if incremental:
-        d = F.lit(report_date).cast("date")
-        fact_all = wh.read(S.FACT_TABLE)
-        today = fact_all.filter(F.col("report_date") == d)
-        yesterday = fact_all.filter(F.col("report_date") == F.date_sub(d, 1))
-        mart = build_mart_incremental(today, yesterday, dim)
-    else:
-        mart = build_mart_history(wh.read(S.FACT_TABLE), dim, report_date)
-    if mart.isEmpty():
-        return False
-    wh.overwrite_partitions(mart, S.MART_TABLE, partition_by=["report_date"])
-    return True
+    return written.get["rows"]

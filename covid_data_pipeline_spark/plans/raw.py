@@ -57,15 +57,16 @@ def process_raw(
     csv_path: str,
     source_file: str | None = None,
 ) -> DataFrame:
-    """Land one day's CSV into raw.daily_reports (append — one file per
-    day, re-land handled upstream by idempotent landing keys)."""
+    """Land one day's CSV into raw.daily_reports, overwriting the day's
+    ingest_date partition: re-landing a day replaces it instead of
+    doubling it."""
     source_file = source_file or csv_path
     df = read_csv(spark, csv_path, header=True, infer_schema=True)
     out = with_audit_columns(normalize_raw(df), source_file)
     # Partition by ingest_date for downstream pruning; sort within
     # partitions by country for parquet RLE/dictionary efficiency
     # (reference sorts by Country_Region before write, :102).
-    wh.append(
+    wh.overwrite_partitions(
         out,
         S.RAW_TABLE,
         partition_by=["ingest_date"],

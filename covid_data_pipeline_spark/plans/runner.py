@@ -3,7 +3,8 @@
 Reference orchestration (covid_to_s3.py:169-173 + covid_alerts_dag.py):
 land CSV → raw → ods → dds → mart → alerts, one simulated day per run,
 cursor managed by the caller. ``run_day`` is idempotent end-to-end:
-every sink is partition-overwrite or anti-join-dedup'd append.
+every sink is partition-overwrite or anti-join-dedup'd append, raw
+included, so re-landing a day's CSV replaces it.
 """
 
 from __future__ import annotations
@@ -25,7 +26,9 @@ from covid_data_pipeline_spark.sources.writers import Warehouse
 @dataclass
 class DayResult:
     report_date: str
-    stages: dict[str, bool] = field(default_factory=dict)
+    # Rows each layer wrote for the day ("ods", "dds", "mart"), observed
+    # on its write; layers after an empty ODS day are absent.
+    rows: dict[str, int] = field(default_factory=dict)
     new_alerts: int = 0
 
 
@@ -45,7 +48,6 @@ def run_day(
     wh: Warehouse,
     report_date: str,
     csv_path: str | None = None,
-    incremental_mart: bool = False,
     with_alerts: bool = True,
 ) -> DayResult:
     """Process one simulated day end-to-end. ``csv_path=None`` skips the
@@ -53,13 +55,10 @@ def run_day(
     result = DayResult(report_date=report_date)
     if csv_path is not None:
         process_raw(spark, wh, csv_path, source_file=csv_path)
-        result.stages["raw"] = True
-    result.stages["ods"] = process_ods(spark, wh, report_date)
-    if result.stages["ods"]:
-        result.stages["dds"] = process_dds(spark, wh, report_date)
-        result.stages["mart"] = process_mart(
-            spark, wh, report_date, incremental=incremental_mart
-        )
+    result.rows["ods"] = process_ods(spark, wh, report_date)
+    if result.rows["ods"]:
+        result.rows["dds"] = process_dds(spark, wh, report_date)
+        result.rows["mart"] = process_mart(spark, wh, report_date)
         if with_alerts:
             result.new_alerts = run_all_alerts(spark, wh, report_date)
     return result
